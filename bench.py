@@ -14,18 +14,20 @@ runs >=SPARK_GRAFT_BENCH_PASSES (default 3) FULL INTERLEAVED PASSES over
 the whole query list — the same discipline tools/bench_scaling.py already
 uses for the N→4N legs — and reports the per-query MEDIAN ACROSS PASSES.
 Each pass opens with a fixed pure-JVM calibration scan (crc32+length over
-the whole corpus: no Python, no shuffle, constant work) whose per-pass
-times are committed into the JSON, so an external reader can separate host
-regime from code: if round R's calibration is 1.5× round R-1's, the window
-was 1.5× slower — normalize before comparing query cells. Raw per-pass
-samples for every query are also committed (`queries_passes`) so any cell's
-spread is inspectable, not just its median.
+the whole corpus: no Python, no shuffle, constant work), so an external
+reader can separate host regime from code: if round R's calibration is
+1.5× round R-1's, the window was 1.5× slower — normalize before comparing
+query cells.
 
-Round-5 addition: per-pass /proc/stat deltas (`host.per_pass_cpu`:
-steal%/busy%) — the noise regimes were root-caused to hypervisor CPU
-steal, which engages under sustained multi-core load and which a short
-calibration scan under-detects (BENCH.md "Host steal"); steal% is the
-direct window-quality metric an external reader should gate on.
+The last stdout line is a compact summary (<1500 chars: per-query medians,
+calibration median, worst-pass steal%/busy% under `host`, docs/s). The raw
+per-pass samples — every query's seconds (`queries_passes`), the
+calibration's seconds and the /proc/stat deltas (`per_pass_cpu`) — go to
+the side file PASSES_FILE, named in the summary as `passes_file`. The
+noise regimes were root-caused to hypervisor CPU steal, which engages under
+sustained multi-core load and which a short calibration scan under-detects
+(BENCH.md "Host steal"); steal% is the direct window-quality metric an
+external reader should gate on.
 
 The flagship metric is extraction docs/sec over the deterministic synthetic
 corpus (SPARK_GRAFT_BENCH_DOCS pages, default 100000). The scaling protocol
@@ -92,10 +94,41 @@ LINK_CORPUS = os.environ.get(
 EMB_CORPUS = os.environ.get(
     "SPARK_GRAFT_BENCH_EMB_CORPUS", f"/tmp/texteller_embs_{N_DOCS}"
 )
+#: raw per-pass samples: query and calibration seconds, steal%/busy%
+PASSES_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_passes.json")
 
 
 def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def ensure_emb_corpus(spark) -> None:
+    """Materialize the EMB_CORPUS embedding corpus once (untimed).
+
+    N_DOCS 64-dim vectors in 128 hash-placed blobs (blob = vec_id % 128)
+    with +-0.3 noise: the clustered geometry semantic dedup presumes.
+    Uniform random data would be wrong twice over — Voronoi cells of
+    arbitrary seeds in 64-dim are massively skewed (one mega-cluster ~ half
+    the corpus, re-deriving the O(n^2) pair join this operator exists to
+    avoid), and near-dup structure wouldn't exist to find. Rows 0..127 are
+    blob centers themselves, so Forgy seeds land one per blob. The recall
+    tools (tools/bench_ann_recall.py, tools/bench_ivf_recall.py) share it.
+    """
+    from pyspark.sql import functions as F
+
+    if os.path.exists(EMB_CORPUS):
+        return
+    blob = F.col("id") % 128
+
+    def comp(i):
+        center = (F.pmod(F.hash(blob, F.lit(i)), F.lit(2001)) - 1000) / 1000.0
+        noise = (F.pmod(F.hash(F.col("id"), F.lit(i + 64)), F.lit(601)) - 300) / 1000.0
+        return (center + F.when(F.col("id") < 128, 0.0).otherwise(noise)).cast("float")
+
+    arr = F.array(*[comp(i) for i in range(64)])
+    spark.range(N_DOCS).select(
+        F.col("id").alias("vec_id"), arr.alias("embedding")
+    ).repartition(64).write.mode("overwrite").parquet(EMB_CORPUS)
 
 
 def main() -> None:
@@ -178,31 +211,6 @@ def main() -> None:
         d.select(url.alias("url"), html.alias("html_str")).repartition(64).write.mode(
             "overwrite"
         ).parquet(LINK_CORPUS)
-
-    def ensure_emb_corpus():
-        # N_DOCS 64-dim vectors in 128 hash-placed blobs (blob = vec_id %
-        # 128) with +-0.3 noise: the clustered geometry semantic dedup
-        # presumes. Uniform random data would be wrong twice over — Voronoi
-        # cells of arbitrary seeds in 64-dim are massively skewed (one
-        # mega-cluster ~ half the corpus, re-deriving the O(n^2) pair join
-        # this operator exists to avoid), and near-dup structure wouldn't
-        # exist to find. Rows 0..127 are blob centers themselves, so Forgy
-        # seeds land one per blob.
-        if os.path.exists(EMB_CORPUS):
-            return
-        blob = F.col("id") % 128
-
-        def comp(i):
-            center = (F.pmod(F.hash(blob, F.lit(i)), F.lit(2001)) - 1000) / 1000.0
-            noise = (F.pmod(F.hash(F.col("id"), F.lit(i + 64)), F.lit(601)) - 300) / 1000.0
-            return (center + F.when(F.col("id") < 128, 0.0).otherwise(noise)).cast(
-                "float"
-            )
-
-        arr = F.array(*[comp(i) for i in range(64)])
-        spark.range(N_DOCS).select(
-            F.col("id").alias("vec_id"), arr.alias("embedding")
-        ).repartition(64).write.mode("overwrite").parquet(EMB_CORPUS)
 
     def wide(path):
         # ~25 MB of tiny parquet files collapses to 1-2 scan partitions
@@ -370,12 +378,13 @@ def main() -> None:
     if "web_domain_rank" in builders:
         ensure_link_corpus()
     if "cluster_kmeans" in builders or "dedup_semantic" in builders:
-        ensure_emb_corpus()
+        ensure_emb_corpus(spark)
 
     # --- calibration query: fixed pure-JVM work (crc32 + length over every
     # corpus text byte; no Python workers, no shuffle, no UDF), so its time
-    # moves ONLY with the host window. Committed per-pass into the JSON —
-    # the normalizer that makes round-over-round cells falsifiable.
+    # moves ONLY with the host window. Its median (per-pass times in
+    # PASSES_FILE) is the normalizer that makes round-over-round cells
+    # falsifiable.
     def calibration():
         return corpus.select(
             F.sum(F.crc32(F.col("text"))).alias("crc"),
@@ -403,7 +412,7 @@ def main() -> None:
     # multi-core load (measured: 32% steal and 4.5x per-vCPU skew on an
     # identical 32-process spin loop during a degraded window, while a
     # 0.2 s calibration scan stayed nominal because short bursts fit
-    # between throttle periods). Committing steal%/busy% per pass lets an
+    # between throttle periods). Recording steal%/busy% per pass lets an
     # external reader grade the window directly.
     def _cpu_snap():
         try:
@@ -454,37 +463,47 @@ def main() -> None:
         if "pipeline_extract" in timings
         else None
     )
-    print(
-        json.dumps(
+    with open(PASSES_FILE, "w") as f:
+        json.dump(
             {
-                "metric": "total_headline_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "cpus": CPUS,
-                "protocol": {
-                    "passes": PASSES,
-                    "interleaved": True,
-                    "flagship_runs_per_pass": FLAGSHIP_PER_PASS,
-                },
-                "calibration": {
-                    "name": "jvm_crc32_scan",
-                    "per_pass_sec": calib,
-                    "median_sec": median(calib),
-                },
-                "host": {"per_pass_cpu": host_passes},
                 "queries_passes": samples,
-                "extract_docs": N_DOCS,
-                "extract_docs_per_sec": docs_per_sec,
-                "extract_pdfs_per_sec": (
-                    round(N_PDFS / timings["pipeline_extract_pdf"], 1)
-                    if "pipeline_extract_pdf" in timings
-                    else None
-                ),
-            }
+                "calibration_per_pass_sec": calib,
+                "per_pass_cpu": host_passes,
+            },
+            f,
         )
-    )
+    passes_cpu = [h for h in host_passes if h]
+    summary = {
+        "metric": "total_headline_sec",
+        "value": total,
+        "unit": "sec",
+        # 10 ms resolution keeps the line short; full samples in passes_file
+        "queries": {name: round(t, 2) for name, t in timings.items()},
+        "sf": sf,
+        "cpus": CPUS,
+        "protocol": {
+            "passes": PASSES,
+            "interleaved": True,
+            "flagship_runs_per_pass": FLAGSHIP_PER_PASS,
+        },
+        "calibration": {
+            "name": "jvm_crc32_scan",
+            "median_sec": median(calib),
+        },
+        "host": {
+            "steal_pct_max": max((h["steal_pct"] for h in passes_cpu), default=None),
+            "busy_pct_min": min((h["busy_pct"] for h in passes_cpu), default=None),
+        },
+        "passes_file": os.path.basename(PASSES_FILE),
+        "extract_docs": N_DOCS,
+        "extract_docs_per_sec": docs_per_sec,
+        "extract_pdfs_per_sec": (
+            round(N_PDFS / timings["pipeline_extract_pdf"], 1)
+            if "pipeline_extract_pdf" in timings
+            else None
+        ),
+    }
+    print(json.dumps(summary, separators=(",", ":")))
     spark.stop()
 
 

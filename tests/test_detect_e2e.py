@@ -11,6 +11,7 @@ import pytest
 from texteller_spark.operators.assemble import assemble_document
 from texteller_spark.operators.detect import decode_page, detect_document
 from texteller_spark.operators.recognize import recognize_span
+from texteller_spark.schema import DETECT_CONF_THRESHOLD
 from texteller_spark.sources.pages import (
     TINY_CLASSES,
     expected_extraction,
@@ -61,11 +62,14 @@ def test_e2e_byte_identity(page):
 @pytest.mark.parametrize("page", CORPUS, ids=[p["_class"] + str(i) for i, p in enumerate(CORPUS)])
 def test_offsets_are_exact_provenance(page):
     """Math span offsets must slice the decoded document to the raw source;
-    offsets are monotone and non-overlapping (mask disjointness)."""
+    offsets are monotone and non-overlapping (mask disjointness). No span
+    is emitted below the P1 threshold: the kernels rely on detection alone
+    for the confidence filter."""
     doc = decode_page(page["html"])
     spans = detect_document(doc)
     prev_end = 0
     for s in spans:
+        assert s.confidence >= DETECT_CONF_THRESHOLD
         assert 0 <= s.char_start < s.char_end <= len(doc)
         assert s.char_start >= prev_end  # disjoint, reading order
         prev_end = s.char_end
@@ -80,6 +84,12 @@ def test_currency_stays_text():
     assert all(s.kind == "text" for s in spans)
     joined = " ".join(s.raw for s in spans)
     assert "$5" in joined and "$10" in joined
+    # low-confidence single-dollar matches stay text, never sub-threshold spans
+    for html in ("<p>$5 and $10</p>", "<p>from $3 to $4, or $x^2$ for $7 and $8</p>",
+                 "<p>$5 and $10</p><p>$a$ costs $2 or $3</p>"):
+        spans = detect_document(decode_page(html))
+        assert spans
+        assert all(s.confidence >= DETECT_CONF_THRESHOLD for s in spans)
 
 
 def test_boilerplate_suppressed():

@@ -1,5 +1,7 @@
 """Structured Streaming lift: same kernels over an unbounded source."""
 
+import time
+
 from texteller_spark.schema import PAGES_SCHEMA
 from texteller_spark.sources.pages import tiny_corpus
 from texteller_spark.streaming.stream import streaming_extract, streaming_span_rates
@@ -121,7 +123,16 @@ def test_streaming_dedup_ttl_wiring(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # With a processing-time timeout every trigger also runs a no-data
+    # batch, so this availableNow query never terminates on its own: wait
+    # (bounded) for the batch that carried the rows, then stop it.
+    deadline = time.monotonic() + 120
+    try:
+        while q.isActive and not any(p.numInputRows > 0 for p in q.recentProgress):
+            assert time.monotonic() < deadline, "no micro-batch read the input"
+            time.sleep(0.1)
+    finally:
+        q.stop()
     got = {r["url"]: r["warc_ts"] for r in spark.sql("SELECT * FROM ttl_out").collect()}
     assert set(got) == {"https://a.test/", "https://b.test/"}
     assert got["https://a.test/"].hour == 0  # min warc_ts within the batch

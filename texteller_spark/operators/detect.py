@@ -337,10 +337,7 @@ detect_spans_udf = pandas_udf(_detect_batches, returnType=SPANS_ARRAY)
 
 
 def with_spans(df, html_col: str = "html"):
-    """``df`` + a ``spans`` column, with the declarative P1 confidence
-    filter in the plan (already enforced inside detection; kept as the
-    Catalyst-visible predicate)."""
-    return df.withColumn("spans", detect_spans_udf(F.col(html_col))).withColumn(
-        "spans",
-        F.filter("spans", lambda s: s["confidence"] >= F.lit(DETECT_CONF_THRESHOLD)),
-    )
+    """``df`` + a ``spans`` column. The P1 confidence filter needs no plan
+    predicate: :func:`detect_document` keeps low-confidence matches in the
+    text run and never emits a span below ``DETECT_CONF_THRESHOLD``."""
+    return df.withColumn("spans", detect_spans_udf(F.col(html_col)))

@@ -152,34 +152,3 @@ def _recognize_batches(
 #: scalar pandas UDF: (kind, raw) → content (Arrow-batched, span-granular —
 #: used by the exploded span-table path)
 recognize_udf = pandas_udf(_recognize_batches, returnType=StringType())
-
-
-def _recognize_array_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for spans_col in it:
-        out = []
-        for spans in spans_col:
-            recognized = []
-            for s in spans if spans is not None else []:
-                d = dict(s)
-                d["content"] = recognize_span(d["kind"], d["raw"])
-                recognized.append(d)
-            out.append(recognized)
-        yield pd.Series(out, dtype="object")
-
-
-def make_recognize_spans_udf():
-    """Doc-granular recognition: spans array → spans+content array.
-
-    Keeping the spans of a page together (instead of explode → recognize →
-    groupBy) removes the re-grouping shuffle entirely: reassembly needs
-    per-page locality anyway, so the flagship plan stays a pure map after
-    one repartition. Span-granular batching (``recognize_udf``) remains for
-    the exploded span-table path.
-    """
-    from ..schema import CONTENT_SPAN_SCHEMA
-    from pyspark.sql.types import ArrayType
-
-    return pandas_udf(_recognize_array_batches, returnType=ArrayType(CONTENT_SPAN_SCHEMA))
-
-
-recognize_spans_udf = make_recognize_spans_udf()

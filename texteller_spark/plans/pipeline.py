@@ -1,28 +1,30 @@
-"""The flagship extraction plan: pages → spans → recognized → assembled.
+"""The flagship extraction plan: one shuffle-free fused map, page → text.
 
-Spark-first re-expression of the reference's mix_inference dataflow
-(``/root/reference/src/models/utils/mix_inference.py:136-264``):
+Spark-first re-expression of the reference's ``mix_inference`` dataflow
+(per-document fan-out into spans, per-span recognition, ordered
+re-assembly):
 
 ::
 
-    pages (scan: url, warc_ts, html, text, lang)
-      → repartition(P, xxhash64(url, salt) % P)      # salted skew discipline
-      → withColumn(spans = detect_udf(html))          # D1+D2 fused (Arrow)
-      → filter(confidence ≥ 0.5)                      # P1, Catalyst-visible
-      → explode(spans)                                # span-granular skew
-      → sortWithinPartitions(length(raw))             # width-sorted batching (W4)
-      → withColumn(content = recognize_udf(kind,raw)) # R1+R2+normalize (Arrow)
-      → groupBy(url).agg(array_sort(collect_list(...)))  # deterministic order
-      → withColumn(extracted_text = assemble_udf(spans)) # ordered fold (A2)
+    pages (scan: url, html, …)
+      → select(url, extract_udf(html))   # decode → detect → recognize → assemble
+      → (url, spans, extracted_text)     # one Arrow round trip per batch
 
-Two exchanges total: the initial salted repartition and the final groupBy.
-``array_sort(collect_list(struct(span_id first, …)))`` makes assembly
-independent of partition count / arrival order (determinism invariant the
-scaling test relies on, SURVEY.md §7.3).
+No exchange: extraction needs per-page locality only, which the scan
+already provides, so parallelism comes from input split planning
+(``spark.sql.files.maxPartitionBytes`` in ``session.py``). The fused
+kernel is :func:`extract_page_kernel`; its detect → recognize loop is
+:func:`recognize_piece_kernel`, shared with the chunked path.
 
-At production scale the scan is an Iceberg table bucketed by ``url`` hash;
-in-sandbox the same plan runs over parquet. Per-partition lineage counters
-and resumable checkpointing live in ``checkpoint.py``.
+Two plans reuse the same operators where a shuffle pays for itself:
+
+* :func:`extract_pages_chunked` (W5) splits huge documents at safe points,
+  spreads the pieces with one repartition and re-assembles per url;
+* :func:`span_table` (S5) is the exploded, span-granular intermediate
+  table with width-sorted recognition batches.
+
+Per-partition lineage counters and resumable checkpointing live in
+``checkpoint.py``.
 """
 
 from __future__ import annotations
@@ -43,56 +45,17 @@ from ..operators.detect import (
     detect_document,
     with_spans,
 )
-from ..operators.recognize import recognize_span, recognize_spans_udf, recognize_udf
-from ..schema import CONTENT_SPAN_SCHEMA, DETECT_CONF_THRESHOLD
+from ..operators.recognize import recognize_span, recognize_udf
+from ..schema import CONTENT_SPAN_SCHEMA
 
 __all__ = [
-    "detect_stage",
-    "recognize_stage",
     "assemble_stage",
     "extract_pages",
     "extract_pages_chunked",
     "span_table",
 ]
 
-#: deterministic salt for the url-hash repartition (any constant works; the
-#: point is decorrelating from upstream layout, not secrecy)
-SALT = 0x7E57E11E
-
 _SPAN_COLS = ("span_id", "block_id", "kind", "char_start", "char_end", "confidence", "raw")
-
-
-def detect_stage(pages: DataFrame, partitions: int | None = None) -> DataFrame:
-    """(url, html, …) → exploded spans, hash-partitioned by url.
-
-    ONE shuffle for the whole pipeline: ``repartition(p, url)`` both
-    balances the scan (urls are unique, so hashing them decorrelates any
-    upstream layout skew) and pre-clusters for the final ``groupBy(url)``,
-    which then reuses this partitioning — no second exchange.  The explicit
-    partition count matters twice: it pins parallelism for the Python-UDF
-    stages (AQE's size-based coalescing is blind to per-row UDF cost and
-    would otherwise collapse them to a handful of tasks), and it is the
-    skew knob at production scale.
-    """
-    p = partitions or int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    balanced = pages.repartition(p, F.col("url"))
-    # explode_outer keeps span-less pages (empty/undecodable html) so they
-    # reach the output and the resume checkpoint — otherwise every re-run
-    # would re-process them forever.
-    return (
-        with_spans(balanced)
-        .select("url", F.explode_outer("spans").alias("span"))
-        .select("url", "span.*")
-    )
-
-
-def recognize_stage(spans: DataFrame) -> DataFrame:
-    """Exploded spans → + content. Width-sorted batching: sorting each
-    partition by payload length keeps Arrow batches size-homogeneous (the
-    reference sorts recognition crops by aspect ratio for the same reason)."""
-    return spans.sortWithinPartitions(F.length("raw")).withColumn(
-        "content", recognize_udf(F.col("kind"), F.col("raw"))
-    )
 
 
 def assemble_stage(recognized: DataFrame) -> DataFrame:
@@ -135,9 +98,25 @@ def assemble_stage(recognized: DataFrame) -> DataFrame:
 
 def span_table(pages: DataFrame, partitions: int | None = None) -> DataFrame:
     """Exploded recognized spans — the persisted intermediate table analog
-    of the reference's crop sink (S5): one row per span, width-sorted
-    recognition batches."""
-    return recognize_stage(detect_stage(pages, partitions))
+    of the reference's crop sink (S5): one row per span.
+
+    The explicit ``repartition(p, url)`` pins parallelism for the Python-UDF
+    stages (AQE's size-based coalescing is blind to per-row UDF cost).
+    Width-sorted batching: sorting each partition by payload length keeps
+    Arrow batches size-homogeneous (the reference sorts recognition crops
+    by aspect ratio for the same reason).
+    """
+    p = partitions or int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # explode_outer keeps span-less pages (empty/undecodable html) as one
+    # all-null span row
+    spans = (
+        with_spans(pages.repartition(p, F.col("url")))
+        .select("url", F.explode_outer("spans").alias("span"))
+        .select("url", "span.*")
+    )
+    return spans.sortWithinPartitions(F.length("raw")).withColumn(
+        "content", recognize_udf(F.col("kind"), F.col("raw"))
+    )
 
 
 _EXTRACT_RESULT = T.StructType(
@@ -149,22 +128,14 @@ _EXTRACT_RESULT = T.StructType(
 
 
 def extract_page_kernel(html) -> tuple[list[dict], str]:
-    """The fused per-page kernel: detect → recognize → assemble, one pass.
+    """The fused per-page kernel: decode → detect → recognize → assemble.
 
-    Pure composition of the three tested operator kernels; fusing them into
-    one UDF means ONE Arrow round trip per page (html in, spans+text out)
-    instead of three round trips of the full span payload — the dominant
-    cost at high core counts is Arrow (de)serialization on JVM threads, not
-    the Python work itself.
+    The whole page is one piece at offset 0 of :func:`recognize_piece_kernel`.
+    Fusing the stages into one UDF means ONE Arrow round trip per page
+    (html in, spans+text out) instead of one per stage over the full span
+    payload.
     """
-    spans = detect_document(decode_page(html))
-    recognized = []
-    for s in spans:
-        if s.confidence < DETECT_CONF_THRESHOLD:
-            continue
-        d = s._asdict()
-        d["content"] = recognize_span(s.kind, s.raw)
-        recognized.append(d)
+    recognized = recognize_piece_kernel(decode_page(html), 0)
     return recognized, assemble_document(recognized)
 
 
@@ -221,21 +192,24 @@ def make_chunk_udf(max_chunk_chars: int):
 
 
 def recognize_piece_kernel(piece: str, off: int) -> list[dict]:
-    """Detect + recognize one chunk; char offsets and span/block ids are
-    rebased by the chunk's char offset (monotonic across chunks, so
-    block-equality grouping and span ordering match the unchunked scan —
-    int32-safe for documents < 2^31 chars, enforced by chunk_document)."""
+    """The detect → recognize loop over one decoded piece of a document.
+
+    Char offsets and span/block ids are rebased by the piece's char offset
+    ``off`` (monotonic across chunks, so block-equality grouping and span
+    ordering match the unchunked scan — int32-safe for documents < 2^31
+    chars, enforced by chunk_document). A whole page is the piece at
+    offset 0, which skips the rebase."""
     out = []
     for s in detect_document(piece):
-        if s.confidence < DETECT_CONF_THRESHOLD:
-            continue
         d = s._asdict()
-        d["span_id"] = s.span_id + off
-        d["block_id"] = s.block_id + off
-        d["char_start"] = s.char_start + off
-        d["char_end"] = s.char_end + off
         d["content"] = recognize_span(s.kind, s.raw)
         out.append(d)
+    if off:
+        for d in out:
+            d["span_id"] += off
+            d["block_id"] += off
+            d["char_start"] += off
+            d["char_end"] += off
     return out
 
 
@@ -313,15 +287,6 @@ def extract_pages(
     takes 10 s to extract, at 32 cores / 3 GB).  Pass ``partitions`` to
     opt into a repartition(url) only when the upstream layout is genuinely
     skewed or has too few files.
-
-    Two earlier revisions of this plan are cautionary tales kept in git
-    history: explode → groupBy(url) re-grouping (Generate breaks hash-
-    partitioning propagation → second exchange, which AQE then coalesced to
-    ONE partition — AQE sizes partitions by shuffle bytes and is blind to
-    per-row Python-UDF cost), and three chained span-array UDFs (3× Arrow
-    round trips of the full span payload).  The exploded span-granular plan
-    lives on in :func:`span_table` (checkpointable intermediate,
-    width-sorted recognition batches).
 
     (Design echoes the public literature: UDF-pipeline operator fusion
     ["Optimizing UDF Queries in SQL Data Engines", EDBT'26; "ML Inference

@@ -72,7 +72,10 @@ def streaming_dedup_first_seen(
     expires via a processing-time timeout, so a url re-crawled after the
     TTL is treated as first-seen again and RE-emitted — the standard
     bounded-state dedup tradeoff (dedup window = TTL). Default ``None``
-    keeps exact forever-state semantics.
+    keeps exact forever-state semantics. With a TTL, Spark schedules a
+    no-data batch on every trigger to fire timeouts, so an ``availableNow``
+    query does not terminate on its own: stop it once its input is
+    processed.
     """
     import pandas as pd  # noqa: F401  (pandas batches cross the state op)
     from pyspark.sql.streaming.state import GroupStateTimeout

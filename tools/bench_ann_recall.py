@@ -6,9 +6,9 @@ fixtures — "a decontamination run at 10^9 rows needs a recall/cost curve
 tune blind". This tool measures exactly that:
 
 - corpus: the SAME 100k×64 clustered-blob embedding corpus bench.py uses
-  (recipe copied verbatim from bench.py `ensure_emb_corpus` — 128
-  hash-placed blob centers, ±0.3 noise), the geometry a near-dup /
-  decontamination workload actually has;
+  (built by bench.py's `ensure_emb_corpus` — 128 hash-placed blob
+  centers, ±0.3 noise), the geometry a near-dup / decontamination
+  workload actually has;
 - queries: every 397th corpus vector (252 queries), self-match excluded on
   both sides;
 - exact baseline: numpy brute-force cosine top-k per query (rounded to 4
@@ -34,10 +34,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
-N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
-EMB_CORPUS = os.environ.get(
-    "SPARK_GRAFT_BENCH_EMB_CORPUS", f"/tmp/texteller_embs_{N_DOCS}"
-)
+from bench import EMB_CORPUS, ensure_emb_corpus  # noqa: E402
+
 QUERY_STRIDE = 397
 K = 10
 # keep r = bits/bands >= 8: at 100k rows a band with 2^r buckets admits
@@ -50,25 +48,6 @@ CONFIGS = [
     (24, 3, 0), (24, 3, 8), (24, 3, 16),
     (32, 4, 0), (32, 4, 8), (32, 4, 16),
 ]
-
-
-def ensure_emb_corpus(spark):
-    # identical recipe to bench.py ensure_emb_corpus (keep in sync)
-    from pyspark.sql import functions as F
-
-    if os.path.exists(EMB_CORPUS):
-        return
-    blob = F.col("id") % 128
-
-    def comp(i):
-        center = (F.pmod(F.hash(blob, F.lit(i)), F.lit(2001)) - 1000) / 1000.0
-        noise = (F.pmod(F.hash(F.col("id"), F.lit(i + 64)), F.lit(601)) - 300) / 1000.0
-        return (center + F.when(F.col("id") < 128, 0.0).otherwise(noise)).cast("float")
-
-    arr = F.array(*[comp(i) for i in range(64)])
-    spark.range(N_DOCS).select(
-        F.col("id").alias("vec_id"), arr.alias("embedding")
-    ).repartition(64).write.mode("overwrite").parquet(EMB_CORPUS)
 
 
 def main():
@@ -113,7 +92,8 @@ def main():
         wall = time.monotonic() - t0
         release_caches()
         byq_top, byq_all = {}, {}
-        for r in got:
+        # rank order per query, so the [:K] cut below keeps the K best
+        for r in sorted(got, key=lambda r: r["rnk"]):
             if r["neighbor_id"] == r["query_id"]:
                 continue
             byq_all.setdefault(r["query_id"], []).append(r["neighbor_id"])

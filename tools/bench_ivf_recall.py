@@ -29,6 +29,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
+from bench import ensure_emb_corpus  # noqa: E402
+
 N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
 #: UNIFORM=1 swaps the clustered-blob corpus for an unclustered
 #: hash-derived uniform corpus (same recipe as the blob noise, no blob
@@ -53,7 +55,6 @@ GRID = [
 def main():
     from pyspark.sql import functions as F
 
-    from bench_ann_recall import ensure_emb_corpus
     from texteller_spark.operators.clustering import kmeans_fit
     from texteller_spark.operators.dedup import release_caches
     from texteller_spark.operators.similarity import ivf_ann_join
@@ -118,7 +119,8 @@ def main():
             res.unpersist()
             release_caches()
             byq = {}
-            for r in top:
+            # rank order per query, so the [:K] cut below keeps the K best
+            for r in sorted(top, key=lambda r: r["rnk"]):
                 if r["neighbor_id"] != r["query_id"]:
                     byq.setdefault(r["query_id"], []).append(r["neighbor_id"])
             hits = sum(len(set(byq.get(q, [])[:K]) & e) for q, e in exact.items())

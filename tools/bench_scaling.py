@@ -93,8 +93,9 @@ def main() -> None:
         "(this host shows kernel-time noise storms; a wider median resists "
         "them). Host: one 32-core VM. The noise storms are hypervisor CPU "
         "steal (BENCH.md \"Host steal\"): every raw-JSON block below carries "
-        "`host.per_pass_cpu` (steal%/busy% per pass) — gate any per-query "
-        "cell on its pass's steal% before comparing across rounds.\n",
+        "`host` (worst-pass steal%/busy%; per-pass detail in "
+        "`bench_passes.json`) — gate any per-query cell on steal% before "
+        "comparing across rounds.\n",
         "## Scaling (north rule: efficiency ≥ 0.8 from N to 4N)\n",
         "Protocol: identical job, identical input, at three parallelism "
         "levels; two N→4N pairs are reported — local[2]→local[8] and "
