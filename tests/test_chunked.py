@@ -153,6 +153,27 @@ def test_spark_chunked_pipeline_matches_flagship(spark):
     assert sorted(map(tuple, sflag.collect())) == sorted(map(tuple, schunk.collect()))
 
 
+def test_span_table_matches_flagship_spans(spark):
+    """S5 rows are the flagship's exploded spans: every span field plus
+    ``content``, one row per span, a span-less page as one all-null row."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from texteller_spark.plans.pipeline import extract_pages, span_table
+    from texteller_spark.sources.pages import pages_df
+
+    pages = pages_df(spark, 40, partitions=4)
+    flag = (
+        extract_pages(pages)
+        .select("url", F.explode_outer("spans").alias("s"))
+        .select("url", "s.*")
+    )
+    table = span_table(pages)
+    assert table.columns == flag.columns
+    assert Counter(map(tuple, table.collect())) == Counter(map(tuple, flag.collect()))
+
+
 def test_assembled_span_ids_are_dense_ordinals(spark):
     """EXTRACTED_SCHEMA contract: assembled output carries dense 0-based
     span_id regardless of path — the chunked path's offset-rebased ids are
@@ -180,12 +201,18 @@ def test_chunked_partition_count_invariance(spark):
     from texteller_spark.sources.pages import pages_df
 
     pages = pages_df(spark, 24, partitions=3)
-    a = {
-        r["url"]: r["extracted_text"]
-        for r in extract_pages_chunked(pages, 1000, partitions=2).collect()
-    }
-    b = {
-        r["url"]: r["extracted_text"]
-        for r in extract_pages_chunked(pages, 1000, partitions=16).collect()
-    }
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+
+    def texts(p):
+        spark.conf.set(key, str(p))
+        return {
+            r["url"]: r["extracted_text"]
+            for r in extract_pages_chunked(pages, 1000).collect()
+        }
+
+    try:
+        a, b = texts(2), texts(16)
+    finally:
+        spark.conf.set(key, saved)
     assert a == b

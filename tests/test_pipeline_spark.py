@@ -1,5 +1,8 @@
 """Spark-level pipeline tests: byte identity e2e, partition invariance,
-resumable checkpointing, plan shape."""
+resumable checkpointing, layering."""
+
+import ast
+from pathlib import Path
 
 import pytest
 
@@ -30,8 +33,8 @@ def test_extract_byte_identity(spark, tiny_df):
 def test_partition_count_invariance(spark, tiny_df):
     """Output is independent of parallelism — the determinism property the
     N→4N scaling contract relies on."""
-    a = {r["url"]: r["extracted_text"] for r in extract_pages(tiny_df, partitions=2).collect()}
-    b = {r["url"]: r["extracted_text"] for r in extract_pages(tiny_df, partitions=16).collect()}
+    a = {r["url"]: r["extracted_text"] for r in extract_pages(tiny_df.repartition(2)).collect()}
+    b = {r["url"]: r["extracted_text"] for r in extract_pages(tiny_df.repartition(16)).collect()}
     assert a == b
 
 
@@ -79,13 +82,6 @@ def test_stage_metrics_counts(spark, tiny_df):
     assert all(r["stage"] == "scan" for r in m)
 
 
-def test_plan_has_single_final_shuffle(spark, tiny_df):
-    """Plan shape: exactly two exchanges (salted repartition + groupBy)."""
-    plan = extract_pages(tiny_df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 3  # 2 + possible AQE reuse node
-    assert "ArrowEvalPython" in plan or "PythonUDF" in plan
-
-
 def test_extract_pages_text_only(spark, tiny_df):
     from texteller_spark.plans.pipeline import extract_pages
 
@@ -97,3 +93,21 @@ def test_extract_pages_text_only(spark, tiny_df):
     assert slim == full  # byte-identical text, spans simply omitted
     cols = extract_pages(tiny_df, include_spans=False).columns
     assert cols == ["url", "extracted_text"]
+
+
+def test_operator_kernels_import_no_spark_or_pandas():
+    """detect / recognize / assemble are plain kernels: every Spark UDF that
+    calls them lives in ``plans/pipeline.py``."""
+    import texteller_spark.operators as ops
+
+    for name in ("detect", "recognize", "assemble"):
+        tree = ast.parse((Path(ops.__file__).parent / f"{name}.py").read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+            else:
+                continue
+            bad = [m for m in mods if m.split(".")[0] in ("pyspark", "pandas")]
+            assert not bad, f"operators/{name}.py imports {bad}"

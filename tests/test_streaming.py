@@ -1,7 +1,11 @@
 """Structured Streaming lift: same kernels over an unbounded source."""
 
 import time
+from collections import Counter
 
+from pyspark.sql import functions as F
+
+from texteller_spark.plans.pipeline import extract_pages
 from texteller_spark.schema import PAGES_SCHEMA
 from texteller_spark.sources.pages import tiny_corpus
 from texteller_spark.streaming.stream import streaming_extract, streaming_span_rates
@@ -29,11 +33,17 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    got = spark.sql("SELECT kind, count(*) AS n FROM spans_out GROUP BY kind").collect()
-    counts = {r["kind"]: r["n"] for r in got}
-    assert counts.get("text", 0) > 0
-    assert counts.get("embedding", 0) > 0
-    assert counts.get("isolated", 0) > 0
+    cols = ("url", "span_id", "kind", "content")
+    streamed = spark.sql("SELECT * FROM spans_out").select(*cols).collect()
+    batch = (
+        extract_pages(spark.read.parquet(f"{tmp_path}/pages_src"))
+        .select("url", F.explode_outer("spans").alias("s"))
+        .select("url", "s.*")
+        .select(*cols)
+        .collect()
+    )
+    assert Counter(map(tuple, streamed)) == Counter(map(tuple, batch))
+    assert {"text", "embedding", "isolated"} <= {r["kind"] for r in streamed}
 
 
 def test_streaming_windowed_rates(spark, tmp_path):

@@ -14,6 +14,7 @@ import argparse
 from pyspark.sql import SparkSession
 
 from .plans.checkpoint import resume_pending, write_extracted
+from .plans.io import read_table, table_target
 from .plans.pipeline import extract_pages, extract_pages_chunked
 from .session import build_session, ship_package
 from .sources.pages import pages_df
@@ -32,7 +33,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--output", required=True, help="output dir (extracted + _metrics)")
     ap.add_argument("--run-id", default="run0")
     ap.add_argument("--resume", action="store_true", help="skip already-extracted urls")
-    ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument(
         "--chunk-chars",
         type=int,
@@ -59,12 +59,12 @@ def main(argv: list[str] | None = None) -> None:
     if args.resume:
         pages = resume_pending(pages, args.output)
     out = (
-        extract_pages_chunked(pages, args.chunk_chars, partitions=args.partitions)
+        extract_pages_chunked(pages, args.chunk_chars)
         if args.chunk_chars
-        else extract_pages(pages, partitions=args.partitions)
+        else extract_pages(pages)
     )
     write_extracted(out, args.output, args.run_id)
-    n = spark.read.parquet(f"{args.output}/extracted").count()
+    n = read_table(spark, table_target(args.output, "extracted")).count()
     print(f"extracted table now holds {n} urls")
 
 

@@ -17,7 +17,7 @@ Design notes
 ------------
 * These are pure string functions.  On the Spark side they are applied to
   whole Arrow batches inside a scalar ``pandas_udf`` (see
-  ``texteller_spark/operators/recognize.py``) — there is never a per-row
+  ``texteller_spark/plans/pipeline.py``) — there is never a per-row
   Python UDF at the Spark level.
 * ``rewrite_braced`` cannot be expressed with ``regexp_replace`` because the
   argument is brace-balanced with backslash escapes and the rewrite recurses

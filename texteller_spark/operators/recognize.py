@@ -1,7 +1,8 @@
 """Recognition + normalization: span raw source → final content string.
 
 Mirrors the reference's two recognition stages and its normalization pass in
-one fused Arrow-batched kernel:
+one fused per-span kernel, :func:`recognize_span` (plain Python: the Spark
+UDFs that call it live in ``plans/pipeline.py``):
 
 * text spans → entity-unescape + whitespace canonicalization (the CTC
   text-recognition analog, ``/root/reference/src/models/thrid_party/
@@ -12,20 +13,16 @@ one fused Arrow-batched kernel:
 * MathML math spans → deterministic MathML→LaTeX transliteration →
   ``latex_to_katex`` → wrap (wrapping parity with ``mix_inference.py:210-215``).
 
-Fusing recognize+normalize avoids one extra Arrow round-trip per exploded
-span — the batched-kernel discipline the reference applies with its single
-stacked ``generate`` call.
+Fusing recognize+normalize into one call per span, inside the same UDF
+that detects the spans, keeps spans off the Arrow boundary between stages —
+the batched-kernel discipline the reference applies with its single stacked
+``generate`` call.
 """
 
 from __future__ import annotations
 
 import html as _htmllib
 import re
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from ..functions.katex import latex_to_katex, wrap_span
 from ..functions.mathml import mathml_to_latex
@@ -36,7 +33,6 @@ __all__ = [
     "recognize_text",
     "recognize_math",
     "recognize_span",
-    "recognize_udf",
 ]
 
 _WS_RE = re.compile(r"\s+")
@@ -137,18 +133,3 @@ def recognize_span(kind: str, raw: str) -> str:
     if kind == "text":
         return recognize_text(raw)
     return wrap_span(kind, _cap_decode(latex_to_katex(recognize_math(raw))))
-
-
-def _recognize_batches(
-    it: Iterator[tuple[pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
-    for kind, raw in it:
-        yield pd.Series(
-            [None if k is None else recognize_span(k, r) for k, r in zip(kind, raw)],
-            dtype="object",
-        )
-
-
-#: scalar pandas UDF: (kind, raw) → content (Arrow-batched, span-granular —
-#: used by the exploded span-table path)
-recognize_udf = pandas_udf(_recognize_batches, returnType=StringType())

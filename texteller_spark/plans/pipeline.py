@@ -1,8 +1,8 @@
-"""The flagship extraction plan: one shuffle-free fused map, page → text.
+"""The extraction plans: one detect → recognize UDF behind every span.
 
 Spark-first re-expression of the reference's ``mix_inference`` dataflow
 (per-document fan-out into spans, per-span recognition, ordered
-re-assembly):
+re-assembly). The flagship is one shuffle-free fused map, page → text:
 
 ::
 
@@ -14,38 +14,30 @@ No exchange: extraction needs per-page locality only, which the scan
 already provides, so parallelism comes from input split planning
 (``spark.sql.files.maxPartitionBytes`` in ``session.py``). The fused
 kernel is :func:`extract_page_kernel`; its detect → recognize loop is
-:func:`recognize_piece_kernel`, shared with the chunked path.
+:func:`recognize_piece_kernel`.
 
-Two plans reuse the same operators where a shuffle pays for itself:
-
-* :func:`extract_pages_chunked` (W5) splits huge documents at safe points,
-  spreads the pieces with one repartition and re-assembles per url;
-* :func:`span_table` (S5) is the exploded, span-granular intermediate
-  table with width-sorted recognition batches.
-
-Per-partition lineage counters and resumable checkpointing live in
-``checkpoint.py``.
+Every other plan that emits spans runs that loop through ONE UDF,
+:data:`recognize_piece_udf` over ``(offset, piece)``, a whole page being
+the piece at offset 0: :func:`extract_pages_chunked` (W5) over safe-point
+chunks, :func:`span_table` (S5) and ``streaming/stream.py``. All five
+extraction UDFs live here and call the plain-Python operator kernels by
+this module's names at call time. Lineage counters and resumable
+checkpointing live in ``checkpoint.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from typing import Iterator
 
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
-from ..operators.assemble import assemble_document, assemble_udf
-from ..operators.detect import (
-    chunk_document,
-    decode_page,
-    detect_document,
-    with_spans,
-)
-from ..operators.recognize import recognize_span, recognize_udf
+from ..operators.assemble import assemble_document
+from ..operators.detect import chunk_document, decode_page, detect_document
+from ..operators.recognize import recognize_span
 from ..schema import CONTENT_SPAN_SCHEMA
 
 __all__ = [
@@ -56,6 +48,15 @@ __all__ = [
 ]
 
 _SPAN_COLS = ("span_id", "block_id", "kind", "char_start", "char_end", "confidence", "raw")
+
+
+def _assemble_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    for spans_col in it:
+        yield spans_col.map(assemble_document)
+
+
+#: scalar pandas UDF: array<struct spans+content> → extracted_text
+assemble_udf = pandas_udf(_assemble_batches, returnType=T.StringType())
 
 
 def assemble_stage(recognized: DataFrame) -> DataFrame:
@@ -96,26 +97,27 @@ def assemble_stage(recognized: DataFrame) -> DataFrame:
     )
 
 
-def span_table(pages: DataFrame, partitions: int | None = None) -> DataFrame:
+def span_table(pages: DataFrame) -> DataFrame:
     """Exploded recognized spans — the persisted intermediate table analog
     of the reference's crop sink (S5): one row per span.
 
-    The explicit ``repartition(p, url)`` pins parallelism for the Python-UDF
-    stages (AQE's size-based coalescing is blind to per-row UDF cost).
-    Width-sorted batching: sorting each partition by payload length keeps
-    Arrow batches size-homogeneous (the reference sorts recognition crops
-    by aspect ratio for the same reason).
+    The explicit ``repartition(spark.sql.shuffle.partitions, url)`` pins
+    parallelism for the UDF stage (AQE's size-based coalescing is blind to
+    per-row UDF cost). Width-sorted batching (W4): sorting pages by length
+    keeps Arrow batches size-homogeneous (the reference sorts recognition
+    crops by aspect ratio for the same reason).
     """
-    p = partitions or int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    p = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # explode_outer keeps span-less pages (empty/undecodable html) as one
     # all-null span row
-    spans = (
-        with_spans(pages.repartition(p, F.col("url")))
-        .select("url", F.explode_outer("spans").alias("span"))
+    return (
+        pages.repartition(p, F.col("url"))
+        .sortWithinPartitions(F.length("html"))
+        .select(
+            "url",
+            F.explode_outer(recognize_piece_udf(F.lit(0), F.col("html"))).alias("span"),
+        )
         .select("url", "span.*")
-    )
-    return spans.sortWithinPartitions(F.length("raw")).withColumn(
-        "content", recognize_udf(F.col("kind"), F.col("raw"))
     )
 
 
@@ -218,21 +220,18 @@ def _recognize_piece_batches(
 ) -> Iterator[pd.Series]:
     for off_col, piece_col in it:
         yield pd.Series(
-            [recognize_piece_kernel(p, int(o)) for o, p in zip(off_col, piece_col)],
+            [recognize_piece_kernel(decode_page(p), int(o)) for o, p in zip(off_col, piece_col)],
             dtype="object",
         )
 
 
+#: (offset, piece) → recognized spans; a piece is a decoded chunk or raw html
 recognize_piece_udf = pandas_udf(
     _recognize_piece_batches, returnType=T.ArrayType(CONTENT_SPAN_SCHEMA)
 )
 
 
-def extract_pages_chunked(
-    pages: DataFrame,
-    max_chunk_chars: int = 1 << 20,
-    partitions: int | None = None,
-) -> DataFrame:
+def extract_pages_chunked(pages: DataFrame, max_chunk_chars: int = 1 << 20) -> DataFrame:
     """W5: oversized-document extraction with bounded per-task work.
 
     The flagship plan (:func:`extract_pages`) maps whole documents — one
@@ -241,8 +240,9 @@ def extract_pages_chunked(
     math regions — see :func:`texteller_spark.operators.detect.
     safe_split_points`; the byte-domain analog of the reference's sliced
     detection, predict_det.py:198-297) into ≈``max_chunk_chars`` pieces,
-    redistributes the pieces across tasks, detects+recognizes each piece
-    independently with offsets re-projected, and reassembles per url.
+    redistributes the pieces across ``spark.sql.shuffle.partitions`` tasks,
+    detects+recognizes each piece independently with offsets re-projected,
+    and reassembles per url.
     Because spans cannot straddle a safe point, the pixel-domain
     overlap+boundary-dedup machinery degenerates: piece-wise detection is
     EXACT (equivalence property-tested against the unchunked kernel,
@@ -253,7 +253,7 @@ def extract_pages_chunked(
     the common case. Documents with no safe point in a stretch (plain text)
     degrade to one chunk for that stretch.
     """
-    p = partitions or int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    p = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     chunk_udf = make_chunk_udf(max_chunk_chars)
     chunks = (
         pages.select("url", F.explode(chunk_udf(F.col("html"))).alias("c"))
@@ -272,9 +272,7 @@ def extract_pages_chunked(
     return assemble_stage(spans)
 
 
-def extract_pages(
-    pages: DataFrame, partitions: int | None = None, include_spans: bool = True
-) -> DataFrame:
+def extract_pages(pages: DataFrame, include_spans: bool = True) -> DataFrame:
     """Full pipeline: returns (url, spans, extracted_text); with
     ``include_spans=False``, (url, extracted_text) only.
 
@@ -284,9 +282,9 @@ def extract_pages(
     (``spark.sql.files.maxPartitionBytes`` = 32 MB in ``session.py``), not
     from a repartition: shuffling raw html (the widest column in the table)
     costs more than the extraction itself (measured: 23 s to shuffle what
-    takes 10 s to extract, at 32 cores / 3 GB).  Pass ``partitions`` to
-    opt into a repartition(url) only when the upstream layout is genuinely
-    skewed or has too few files.
+    takes 10 s to extract, at 32 cores / 3 GB).  A caller whose upstream
+    layout is genuinely skewed or has too few files repartitions ``pages``
+    first.
 
     (Design echoes the public literature: UDF-pipeline operator fusion
     ["Optimizing UDF Queries in SQL Data Engines", EDBT'26; "ML Inference
@@ -294,11 +292,10 @@ def extract_pages(
     partition-only-when-it-pays rule ["To Partition, or Not to Partition",
     SIGMOD'21] — see PAPERS.md.)
     """
-    balanced = pages.repartition(partitions, F.col("url")) if partitions else pages
     if not include_spans:
-        return balanced.select(
+        return pages.select(
             "url", extract_text_udf(F.col("html")).alias("extracted_text")
         )
-    return balanced.select(
+    return pages.select(
         "url", extract_udf(F.col("html")).alias("res")
     ).select("url", "res.spans", "res.extracted_text")

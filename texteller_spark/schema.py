@@ -47,9 +47,6 @@ SPAN_FIELDS = [
     T.StructField("raw", T.StringType(), False),
 ]
 
-SPAN_SCHEMA = T.StructType(SPAN_FIELDS)
-SPANS_ARRAY = T.ArrayType(SPAN_SCHEMA, containsNull=False)
-
 #: span + recognized/normalized payload (post-recognition)
 CONTENT_SPAN_SCHEMA = T.StructType(
     SPAN_FIELDS + [T.StructField("content", T.StringType(), False)]

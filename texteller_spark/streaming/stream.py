@@ -2,8 +2,10 @@
 
 All three kernels (detect / recognize / assemble) are stateless per-row or
 per-group, so they lift to streaming unchanged: ``readStream`` on the pages
-source → same detect/recognize stages → windowed or ``update``-mode
-assembly.  Late pages are governed by a ``warc_ts`` watermark.
+source → the batch plans' one detect → recognize UDF
+(``recognize_piece_udf``, each page the piece at offset 0) → windowed or
+``update``-mode assembly.  Late pages are governed by a ``warc_ts``
+watermark.
 
 The batch reference has no streaming counterpart (the closest is the Ray
 Serve request loop, ``/root/reference/src/server.py:137-157``); this module
@@ -19,8 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.detect import with_spans
-from ..operators.recognize import recognize_udf
+from ..plans.pipeline import recognize_piece_udf
 
 __all__ = ["streaming_extract", "streaming_span_rates", "streaming_dedup_first_seen"]
 
@@ -29,12 +30,15 @@ def streaming_extract(pages_stream: DataFrame, watermark: str = "1 hour") -> Dat
     """Streaming pages → recognized spans (append-mode safe: no global
     aggregation; per-url assembly happens downstream per micro-batch via
     ``foreachBatch`` or in update mode)."""
-    spans = (
-        with_spans(pages_stream.withWatermark("warc_ts", watermark))
-        .select("url", "warc_ts", F.explode_outer("spans").alias("span"))
+    return (
+        pages_stream.withWatermark("warc_ts", watermark)
+        .select(
+            "url",
+            "warc_ts",
+            F.explode_outer(recognize_piece_udf(F.lit(0), F.col("html"))).alias("span"),
+        )
         .select("url", "warc_ts", "span.*")
     )
-    return spans.withColumn("content", recognize_udf(F.col("kind"), F.col("raw")))
 
 
 def streaming_span_rates(pages_stream: DataFrame, watermark: str = "1 hour",
@@ -42,8 +46,10 @@ def streaming_span_rates(pages_stream: DataFrame, watermark: str = "1 hour",
     """Windowed aggregate over the stream: span counts by kind per
     ``warc_ts`` window (late data beyond the watermark drops)."""
     spans = (
-        with_spans(pages_stream.withWatermark("warc_ts", watermark))
-        .select("warc_ts", F.explode("spans").alias("span"))
+        pages_stream.withWatermark("warc_ts", watermark)
+        .select(
+            "warc_ts", F.explode(recognize_piece_udf(F.lit(0), F.col("html"))).alias("span")
+        )
         .select("warc_ts", "span.kind")
     )
     return spans.groupBy(F.window("warc_ts", window), "kind").agg(
