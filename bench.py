@@ -1,5 +1,5 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: every CPU); prints ONE JSON line.
 
 Methodology (parity with the reference's warmup-skipped timing,
 det_model/inference.py:117-121): a small warmup run primes the JVM, Python
@@ -44,6 +44,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from texteller_spark.session import default_parallelism  # noqa: E402
+
 # glibc tuning inherited by Python workers (must be set before the JVM
 # starts): avoid mmap/munmap per large html string — munmap TLB-shootdown
 # IPIs scale badly with worker count (+19% at 32 cores, measured)
@@ -52,7 +54,7 @@ os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "134217728")
 os.environ.setdefault("MALLOC_ARENA_MAX", "2")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_parallelism()
 N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
 #: restrict to a comma-separated subset (scaling experiment runs only the
 #: pipeline); empty = all

@@ -106,6 +106,9 @@ try:
             "<math><mi>x</mi></math>", '<math display="block"><mi>q</mi></math>',
             "<!-- c -->", "&amp; ", "café ", "<h1>", "</h1>", "<li>", "</li>",
             "<p", ">", "<", "$", "\\",
+            "< /p>", "<P\n>", "<Math>", "</math >", "<!DOCTYPE html>",
+            '<?xml version="1.0"?>', "<![CDATA[ <p>$x^2$ ]]>", "<SCRIPT >",
+            "</ script>", "<svg/>", "<nav>", "</nav>",
         ]
     )
 

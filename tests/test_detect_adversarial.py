@@ -1,6 +1,8 @@
 """Adversarial HTML for the detection kernel: malformed markup, comments,
 CDATA, case sensitivity, script-content traps."""
 
+import pytest
+
 from texteller_spark.operators.detect import decode_page, detect_document
 
 
@@ -67,6 +69,28 @@ def test_unterminated_math_element():
 def test_nested_suppressed_regions():
     doc = "<nav><div><p>menu item</p><script>x</script></div></nav><p>body</p>"
     assert texts(doc).strip() == "body"
+
+
+@pytest.mark.parametrize(
+    "doc, expected",
+    [
+        # whitespace before "/" and a newline before ">" still end a block
+        ("<p>one< /p>two", [("text", 1, "one"), ("text", 2, "two")]),
+        ("<p>one<P\n>two", [("text", 1, "one"), ("text", 2, "two")]),
+        # a declaration and a processing instruction: no block, no text
+        ('one <!DOCTYPE html>two <?xml version="1.0"?>three', [("text", 0, "one two three")]),
+        # "</ script>" closes the suppressed subtree
+        (
+            "<SCRIPT >$a^2$</ script>after $b^2$",
+            [("text", 0, "after "), ("embedding", 0, "$b^2$")],
+        ),
+        # a self-closing suppress tag opens no subtree
+        ("<svg/>kept $c^2$", [("text", 0, "kept "), ("embedding", 0, "$c^2$")]),
+    ],
+    ids=["space-slash-close", "newline-open", "doctype-and-pi", "space-slash-script", "svg-self-closing"],
+)
+def test_tag_shapes_blocks_and_suppression(doc, expected):
+    assert [(s.kind, s.block_id, s.raw) for s in detect_document(doc)] == expected
 
 
 def test_double_dollar_not_confused_with_two_singles():

@@ -51,6 +51,25 @@ from texteller_spark.functions.mathml import mathml_to_latex
         ),
         # broken XML degrades to visible text, never raises
         ("<math><mi>x</mi", "x"),
+        # 200 element levels (the depth cap): still transliterated
+        pytest.param(
+            "<math>" + "<mrow>" * 197 + "<msup><mi>x</mi><mn>2</mn></msup>"
+            + "</mrow>" * 197 + "</math>",
+            "x^{2}",
+            id="depth-200-mrow",
+        ),
+        # deeper trees degrade to visible text instead of RecursionError
+        pytest.param(
+            "<math>" + "<mrow>" * 330 + "<msup><mi>x</mi><mn>2</mn></msup>"
+            + "</mrow>" * 330 + "</math>",
+            "x 2",
+            id="depth-332-mrow",
+        ),
+        pytest.param(
+            "<math>" + "<mfrac>" * 400 + "<mi>x</mi>" + "<mn>1</mn></mfrac>" * 400 + "</math>",
+            "x" + " 1" * 400,
+            id="depth-402-mfrac",
+        ),
     ],
 )
 def test_mathml_to_latex(src, expected):

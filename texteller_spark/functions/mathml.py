@@ -79,6 +79,13 @@ _ACCENT2TEX = {
     "˙": r"\dot", "¨": r"\ddot", "⏞": r"\overbrace", "⏟": r"\underbrace",
 }
 
+#: deepest element tree transliterated (deeper: visible-text fallback).
+#: ``_el_tex`` takes up to 3 frames per level, so 200 levels use at most 600
+#: of CPython's default 1000-frame limit and leave the rest to the caller
+#: (test runner, Spark worker). A fixed cap keeps the outcome a function of
+#: the input; catching ``RecursionError`` would tie it to the caller's stack.
+_MAX_DEPTH = 200
+
 _ENTITY_RE = re.compile(r"&([a-zA-Z][a-zA-Z0-9]*);")
 _XMLNS_RE = re.compile(r'\sxmlns(:[a-zA-Z0-9]+)?\s*=\s*"[^"]*"')
 _NSPREFIX_RE = re.compile(r"(</?)([a-zA-Z0-9]+):")
@@ -112,11 +119,8 @@ def _sym(text: str) -> str:
 
 
 def _group(s: str) -> str:
-    """Brace-wrap unless a single atomic token."""
-    s = s.strip()
-    if len(s) == 1 or (s.startswith("\\") and " " not in s.rstrip()):
-        return "{" + s + "}"
-    return "{" + s + "}"
+    """Brace-wrap, atomic tokens included (``x^{2}``)."""
+    return "{" + s.strip() + "}"
 
 
 def _children_tex(el: ElementTree.Element) -> list[str]:
@@ -201,16 +205,34 @@ def _el_tex(el: ElementTree.Element) -> str:
     return _sym(txt)
 
 
+def _deeper_than(root: ElementTree.Element, limit: int) -> bool:
+    """Whether the element tree has more than ``limit`` levels (iterative)."""
+    level = [root]
+    for _ in range(limit):
+        level = [c for el in level for c in el]
+        if not level:
+            return False
+    return True
+
+
+def _visible_text(cleaned: str) -> str:
+    stripped = re.sub(r"<[^>]*>?", " ", cleaned)  # also eats dangling tags
+    return re.sub(r"\s+", " ", _sym(stripped)).strip()
+
+
 def mathml_to_latex(src: str) -> str:
     """Transliterate a ``<math>…</math>`` element source to LaTeX.
 
-    Total function: on parse failure, returns the tag-stripped visible text.
+    Total function: on parse failure, or when the element tree is deeper
+    than ``_MAX_DEPTH``, returns the tag-stripped visible text.
     """
     cleaned = _pre_clean(src)
     try:
         root = ElementTree.fromstring(cleaned)
     except ElementTree.ParseError:
-        stripped = re.sub(r"<[^>]*>?", " ", cleaned)  # also eats dangling tags
-        return re.sub(r"\s+", " ", _sym(stripped)).strip()
+        return _visible_text(cleaned)
+    # a tree has at most as many levels as the source has "<"
+    if cleaned.count("<") > _MAX_DEPTH and _deeper_than(root, _MAX_DEPTH):
+        return _visible_text(cleaned)
     tex = _el_tex(root)
     return re.sub(r"\s+", " ", tex).strip()

@@ -23,6 +23,11 @@ Contract
   the surrounding text run (e.g. ``$5 and $10``).
 * Text-span ``raw`` is the concatenation of the run's text nodes (inline
   tags stripped); math-span ``raw`` is the exact document slice.
+
+One tag walker (``_walk``, one regex) yields the text, math and block events
+outside suppressed subtrees; ``detect_document`` consumes them all and
+``safe_split_points`` (W5) keeps spaced block events, so a split point is a
+point of the very walk detection makes.
 """
 
 from __future__ import annotations
@@ -30,7 +35,7 @@ from __future__ import annotations
 import gzip
 import re
 import zlib
-from typing import NamedTuple
+from typing import Iterator, NamedTuple
 
 from ..schema import DETECT_CONF_THRESHOLD
 
@@ -60,11 +65,6 @@ _SUPPRESS_TAGS = frozenset(
     "form button select option object embed".split()
 )
 
-#: void elements — never open a subtree
-_VOID_TAGS = frozenset(
-    "br hr img meta link input area base col source track wbr".split()
-)
-
 #: tags that delimit a visual row / block (same_row boundary)
 _BLOCK_TAGS = frozenset(
     "p div h1 h2 h3 h4 h5 h6 li ul ol table thead tbody tr td th br hr "
@@ -72,8 +72,12 @@ _BLOCK_TAGS = frozenset(
     "address center body html".split()
 )
 
-_TAG_RE = re.compile(r"<!--.*?-->|<!\[CDATA\[.*?\]\]>|<[^>]*>", re.DOTALL)
-_TAG_NAME_RE = re.compile(r"<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9]*)")
+#: the one tag tokenizer: comment | CDATA | element tag (group 1 is the
+#: closing ``/``, group 2 the name) | any other ``<…>`` (``<!DOCTYPE>``,
+#: ``<?xml?>``, stray ``<`` + text), whose name group is None
+_TAG_RE = re.compile(
+    r"<!--.*?-->|<!\[CDATA\[.*?\]\]>|<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9]*)[^>]*>|<[^>]*>", re.DOTALL
+)
 _MATH_CLOSE_RE = re.compile(r"</\s*math\s*>", re.IGNORECASE)
 _MATH_DISPLAY_RE = re.compile(r"""display\s*=\s*["']?\s*block""", re.IGNORECASE)
 
@@ -149,14 +153,47 @@ def _classify_tex(m: re.Match) -> tuple[str, float]:
     return "embedding", (0.9 if _TEXY_RE.search(inner) else 0.3)
 
 
-def detect_document(doc: str) -> list[Span]:
-    """One linear pass over the decoded document: tokenize tags, suppress
-    boilerplate subtrees, segment blocks, and surface math + merged text
-    runs as ordered spans."""
-    spans: list[Span] = []
+def _walk(doc: str) -> Iterator[tuple[str, int, int, str | None]]:
+    """Yield ``(event, start, end, open_tag)`` at suppress depth 0, in
+    document order: ``"text"`` for a text node ``doc[start:end]``, ``"math"``
+    for a ``<math>`` region through ``</math>`` or the end (``open_tag`` is
+    its open tag), ``"block"`` for a block-level open or close tag."""
     n = len(doc)
-    block_id = 0
     suppress = 0  # depth inside suppressed subtrees
+    i = 0
+    while i < n:
+        m = _TAG_RE.search(doc, i)
+        text_end = m.start() if m else n
+        if text_end > i and not suppress:
+            yield "text", i, text_end, None
+        if m is None:
+            return
+        i = m.end()
+        name = m.group(2)
+        if name is None:  # comment, CDATA, <!…>, <?…?>, stray <…>
+            continue
+        name = name.lower()
+        closing = m.group(1) == "/"
+        if name == "math" and not closing and not suppress:
+            close = _MATH_CLOSE_RE.search(doc, i)
+            end = close.end() if close else n
+            yield "math", m.start(), end, m.group(0)
+            i = end
+        elif name in _SUPPRESS_TAGS:
+            if closing:
+                suppress = max(0, suppress - 1)
+            elif not m.group(0).rstrip().endswith("/>"):
+                suppress += 1
+        elif name in _BLOCK_TAGS and not suppress:
+            yield "block", m.start(), i, None
+
+
+def detect_document(doc: str) -> list[Span]:
+    """One linear pass over the decoded document: the tag walker's text
+    nodes are scanned for TeX and merged into runs, its ``<math>`` regions
+    become spans, and its block tags close the run and start a new block."""
+    spans: list[Span] = []
+    block_id = 0
 
     # pending text run within the current block
     run_parts: list[str] = []
@@ -164,16 +201,11 @@ def detect_document(doc: str) -> list[Span]:
     run_end = -1
 
     def flush_run() -> None:
-        nonlocal run_parts, run_start, run_end
         if run_parts:
             content = "".join(run_parts)
             if content.strip():
-                spans.append(
-                    Span(0, block_id, "text", run_start, run_end, 1.0, content)
-                )
-            run_parts = []
-            run_start = -1
-            run_end = -1
+                spans.append(Span(0, block_id, "text", run_start, run_end, 1.0, content))
+            run_parts.clear()
 
     def add_text(piece: str, start: int, end: int) -> None:
         nonlocal run_start, run_end
@@ -203,42 +235,15 @@ def detect_document(doc: str) -> list[Span]:
             pos = m.end()
         add_text(node[pos:], start + pos, end)
 
-    i = 0
-    while i < n:
-        m = _TAG_RE.search(doc, i)
-        text_end = m.start() if m else n
-        if text_end > i and suppress == 0:
-            scan_text_node(i, text_end)
-        if m is None:
-            break
-        tag = m.group(0)
-        i = m.end()
-        if tag.startswith("<!") or tag.startswith("<?"):
+    for event, start, end, open_tag in _walk(doc):
+        if event == "text":
+            scan_text_node(start, end)
             continue
-        nm = _TAG_NAME_RE.match(tag)
-        if nm is None:
-            continue
-        closing, name = nm.group(1) == "/", nm.group(2).lower()
-
-        if name == "math" and not closing and suppress == 0:
-            close = _MATH_CLOSE_RE.search(doc, m.end())
-            end = close.end() if close else n
-            flush_run()
-            kind = "isolated" if _MATH_DISPLAY_RE.search(tag) else "embedding"
-            spans.append(Span(0, block_id, kind, m.start(), end, 1.0, doc[m.start() : end]))
-            i = end
-            continue
-
-        if name in _SUPPRESS_TAGS and name not in _VOID_TAGS:
-            self_closing = tag.rstrip().endswith("/>")
-            if closing:
-                suppress = max(0, suppress - 1)
-            elif not self_closing:
-                suppress += 1
-            continue
-
-        if name in _BLOCK_TAGS and suppress == 0:
-            flush_run()
+        flush_run()
+        if event == "math":
+            kind = "isolated" if _MATH_DISPLAY_RE.search(open_tag) else "embedding"
+            spans.append(Span(0, block_id, kind, start, end, 1.0, doc[start:end]))
+        else:
             block_id += 1
 
     flush_run()
@@ -251,16 +256,15 @@ def safe_split_points(doc: str, target_chars: int) -> list[int]:
     detection with overlap+rollback, ``/root/reference/src/models/
     thrid_party/paddleocr/infer/predict_det.py:198-297``).
 
-    A safe point is the start of a BLOCK-level tag at suppress depth 0,
-    outside ``<math>`` regions / comments / CDATA. At such a point the
-    parser state is empty by construction: the pending text run was just
-    flushed (block tags always flush), no math region is open, and no
-    suppressed subtree is open — so detection restarted there produces
-    exactly the spans the single-pass scan would. Because text runs flush
-    at block tags and TeX math lives inside a single text node, NO span can
-    straddle a safe point — which is why the pixel-domain overlap buffer
-    degenerates to zero here (the reference needs overlap because image
-    slices cut arbitrarily; semantic split points cut exactly).
+    A safe point is the start of a block event of ``_walk``, the walker
+    ``detect_document`` consumes: block events come only at suppress depth 0,
+    outside ``<math>`` regions, comments and CDATA, and detection flushes its
+    text run on each, so the parser state there is empty by construction and
+    detection restarted there produces exactly the single-pass spans. NO
+    span can straddle a safe point (TeX math lives inside one text node) —
+    which is why the pixel-domain overlap buffer degenerates to zero here
+    (the reference needs overlap because image slices cut arbitrarily;
+    semantic split points cut exactly).
 
     Points are spaced ≥ ``target_chars``; a document with no block tag in a
     stretch (e.g. plain text) simply yields no point there and the stretch
@@ -268,34 +272,10 @@ def safe_split_points(doc: str, target_chars: int) -> list[int]:
     """
     points: list[int] = []
     next_target = target_chars
-    n = len(doc)
-    suppress = 0
-    i = 0
-    while i < n:
-        m = _TAG_RE.search(doc, i)
-        if m is None:
-            break
-        tag = m.group(0)
-        i = m.end()
-        if tag.startswith("<!") or tag.startswith("<?"):
-            continue
-        nm = _TAG_NAME_RE.match(tag)
-        if nm is None:
-            continue
-        closing, name = nm.group(1) == "/", nm.group(2).lower()
-        if name == "math" and not closing and suppress == 0:
-            close = _MATH_CLOSE_RE.search(doc, m.end())
-            i = close.end() if close else n
-            continue
-        if name in _SUPPRESS_TAGS and name not in _VOID_TAGS:
-            if closing:
-                suppress = max(0, suppress - 1)
-            elif not tag.rstrip().endswith("/>"):
-                suppress += 1
-            continue
-        if name in _BLOCK_TAGS and suppress == 0 and m.start() >= next_target:
-            points.append(m.start())
-            next_target = m.start() + target_chars
+    for event, start, _, _ in _walk(doc):
+        if event == "block" and start >= next_target:
+            points.append(start)
+            next_target = start + target_chars
     return points
 
 

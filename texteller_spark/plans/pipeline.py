@@ -38,7 +38,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 from ..operators.assemble import assemble_document
 from ..operators.detect import chunk_document, decode_page, detect_document
 from ..operators.recognize import recognize_span
-from ..schema import CONTENT_SPAN_SCHEMA
+from ..schema import CONTENT_SPAN_SCHEMA, SPAN_FIELDS
 
 __all__ = [
     "assemble_stage",
@@ -47,7 +47,7 @@ __all__ = [
     "span_table",
 ]
 
-_SPAN_COLS = ("span_id", "block_id", "kind", "char_start", "char_end", "confidence", "raw")
+_SPAN_COLS = tuple(f.name for f in SPAN_FIELDS)
 
 
 def _assemble_batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:

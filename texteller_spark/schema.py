@@ -59,13 +59,3 @@ EXTRACTED_SCHEMA = T.StructType(
         T.StructField("extracted_text", T.StringType(), False),
     ]
 )
-
-#: per-stage, per-partition lineage counters (north rule: checkpointed metrics)
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_bytes", T.LongType(), True),
-    ]
-)

@@ -37,7 +37,8 @@ def ship_package(spark: SparkSession) -> None:
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local cores: ``$SPARK_GRAFT_CPUS``, else every CPU of the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def _build(

@@ -56,30 +56,6 @@ def _app_id(ui: str) -> str:
     return apps[0]["id"]
 
 
-def stage_task_summaries(ui: str, app_id: str, after_stage: int):
-    """[(stage_id, name, n_tasks, med_run_ms, max_run_ms)] for COMPLETE
-    stages with id > after_stage, from the REST task summaries."""
-    stages = json.load(
-        urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages"
-            "?withSummaries=true&quantiles=0.5,1.0&status=complete"
-        )
-    )
-    out = []
-    for s in stages:
-        if s["stageId"] <= after_stage:
-            continue
-        dist = s.get("taskMetricsDistributions") or {}
-        run = dist.get("executorRunTime")
-        if not run:
-            continue
-        out.append(
-            (s["stageId"], s["name"].split("\n")[0], s["numCompleteTasks"],
-             run[0], run[-1])
-        )
-    return out
-
-
 def join_stage(ui: str, app_id: str, after_stage: int):
     """The occurrence-join stage = the new stage with the largest shuffle
     READ volume (it consumes both the keyed and dup exchanges); returns
@@ -124,10 +100,10 @@ def main():
         release_caches,
         remove_repeated_substrings,
     )
+    from texteller_spark.session import default_parallelism
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{default_parallelism()}]")
         .appName("bench-exactsubstr-skew")
         .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTS))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

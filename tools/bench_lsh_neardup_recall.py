@@ -99,8 +99,9 @@ def main():
 
     from texteller_spark.operators.dedup import release_caches
     from texteller_spark.operators.similarity import lsh_near_dup_pairs
+    from texteller_spark.session import default_parallelism
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    cpus = default_parallelism()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("bench-lsh-neardup-recall")

@@ -137,8 +137,7 @@ def main():
     from texteller_spark.operators.dedup import minhash_lsh_pairs, release_caches
     from texteller_spark.session import build_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session("bench-minhash-recall", cpus=cpus)
+    spark = build_session("bench-minhash-recall")
     ensure_corpus(spark)
     corpus = spark.read.parquet(CORPUS)
 
